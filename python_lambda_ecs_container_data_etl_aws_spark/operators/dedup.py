@@ -3,14 +3,29 @@
 - :func:`dedup_exact` — hash-groupBy, keep lowest id. One shuffle.
 - :func:`shingles` / :func:`jaccard_pairs` — exact word-n-gram Jaccard
   (the q22 plan as a reusable operator). Quadratic in candidates.
+- Banded candidates — ONE primitive for every LSH and Hamming family
+  in the package (MinHash here, 60/120-bit SimHash here, hyperplane
+  LSH in ``similarity``, image/audio aHash in ``multimodal``):
+  :func:`_band_rows` emits each signature's bands as one SQL
+  ``array(struct(band, bucket), …)`` explode; :func:`_band_pairs`
+  applies the one ``max_bucket_size`` cap, runs the (band, bucket)
+  equi-join (self-join ``a.id < b.id``, or a probe ``id != id``) and
+  returns the distinct pairs. A family supplies only its band slices
+  — :func:`_hash_bands` (xxhash64 over column groups) or
+  :func:`_bit_bands` (bit slices of one or two BIGINT limbs) — and its
+  verify: scalar signatures ride the join and verify BEFORE the
+  distinct; array payloads join on ids only and are attached once,
+  after it (:func:`_attach_payload`).
 - :func:`minhash_signatures` / :func:`lsh_candidate_pairs` /
   :func:`minhash_lsh_dedup` — the 100 TB path: shingle → xxhash64 →
   K universal-hash min-aggregations → band → bucket-join. Candidate
   generation is linear in corpus size (per bucket), and only candidates
-  pay the exact-Jaccard verify.
+  pay the exact-Jaccard verify. :func:`lsh_index_of` /
+  :func:`neardup_pairs_vs_index` are the incremental (batch vs stored
+  index) form.
 - :func:`simhash_signatures` / :func:`simhash_pairs` — 60-bit SimHash
   (md5-derived token bits, so the pipeline is SQL-oracle-able) with
-  banded candidate generation and Hamming-distance verify.
+  pigeonhole-complete banding and Hamming-distance verify.
 - :func:`simhash_wide_signatures` / :func:`simhash_wide_pairs` —
   120-bit SimHash (both md5 halves, two BIGINT limbs): the design-
   scale geometry. 7 bands × ≥17 bits ⇒ ≥131k buckets/band, cutting
@@ -224,77 +239,185 @@ def minhash_signatures(
     return hashed.groupBy("id").agg(*aggs)
 
 
-def banded_buckets(sig: DataFrame, num_bands: int = 16) -> DataFrame:
-    """Band a signature relation into (id, band, bucket) rows — one
-    xxhash64 bucket per band over that band's hash columns."""
-    hcols = [c for c in sig.columns if c.startswith("h")]
-    rows_per_band = len(hcols) // num_bands
-    # one SQL parse for the whole band array (round 12, same rationale
-    # as minhash_signatures): SQL xxhash64 uses the same default seed
-    # (42) as the Column API, so buckets are bit-identical
-    parts = ", ".join(
-        "struct({b} AS band, xxhash64({cols}) AS bucket)".format(
-            b=bnd,
-            cols=", ".join(
-                hcols[bnd * rows_per_band : (bnd + 1) * rows_per_band]
-            ),
+# --------------------------------------------------------------------------
+# Banded candidates: the one generate → prune → verify primitive (see
+# the module docstring).
+
+
+def _q(col: str) -> str:
+    """A column name backtick-quoted for interpolation into SQL."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _hash_bands(cols: list[str], num_bands: int) -> list[str]:
+    """MinHash band buckets: ``xxhash64`` over each consecutive group
+    of ``len(cols) // num_bands`` signature columns. SQL xxhash64 uses
+    the same default seed (42) as the Column API, so buckets (and the
+    persisted index) are bit-identical to the Column form."""
+    rows = len(cols) // num_bands
+    return [
+        "xxhash64({})".format(", ".join(_q(c) for c in cols[i * rows : (i + 1) * rows]))
+        for i in range(num_bands)
+    ]
+
+
+def _pigeonhole_spans(
+    bits: int, max_distance: int, num_bands: int | None = None
+) -> list[tuple[int, int]]:
+    """``num_bands`` contiguous (offset, width) slices partitioning
+    ``bits``, widths as even as possible (wider first). By pigeonhole a
+    pair at Hamming distance ≤ num_bands - 1 agrees exactly on ≥1
+    slice, so the banded candidate set is complete for
+    ``max_distance < num_bands``. ``num_bands`` defaults to
+    ``max_distance + 1`` — the pigeonhole MINIMUM: fewer bands breaks
+    completeness, and more is strictly worse (every extra band narrows
+    every bucket, and candidate volume grows ~ num_bands · n² / 2^width).
+    """
+    if num_bands is None:
+        num_bands = max_distance + 1
+    if num_bands > bits:
+        raise ValueError("num_bands cannot exceed the signature width")
+    if num_bands <= max_distance:
+        # a true pair could differ by one bit in every band, share no
+        # bucket, and be silently dropped — an incomplete result, not a
+        # slower one
+        raise ValueError(
+            f"num_bands ({num_bands}) must exceed max_distance "
+            f"({max_distance}) for a complete candidate set"
         )
-        for bnd in range(num_bands)
+    base, extra = divmod(bits, num_bands)
+    widths = [base + (1 if i < extra else 0) for i in range(num_bands)]
+    return [(sum(widths[:i]), w) for i, w in enumerate(widths)]
+
+
+def _bit_bands(
+    limbs: list[str], spans: list[tuple[int, int]], limb_bits: int = 64
+) -> list[str]:
+    """Bit-slice band buckets: bits [p, p+w) of the logical value held
+    low limb first in BIGINT ``limbs`` of ``limb_bits`` bits each
+    (``sim_lo``/``sim_hi`` are 60-bit limbs; a single 64-bit limb is
+    read as unsigned). A slice straddling two limbs masks the upper
+    limb BEFORE shifting it left, so every intermediate stays < 2^w —
+    no signed-64 overflow under ANSI mode."""
+    out = []
+    for p, w in spans:
+        k, r = divmod(p, limb_bits)
+        lo = f"shiftrightunsigned({_q(limbs[k])}, {r})"
+        if r + w <= limb_bits:
+            out.append(f"({lo} & {(1 << w) - 1}L)")
+        else:
+            hi_mask = (1 << (r + w - limb_bits)) - 1
+            out.append(
+                f"({lo} | shiftleft({_q(limbs[k + 1])} & {hi_mask}L, {limb_bits - r}))"
+            )
+    return out
+
+
+def _band_rows(
+    sig: DataFrame, buckets: list[str], carry: list[str] | tuple = ()
+) -> DataFrame:
+    """(id, *carry, band, bucket): one row per band of every signature
+    row, band i's bucket being the SQL expression ``buckets[i]``.
+
+    The whole band array is ONE SQL parse: composing a
+    ``F.struct`` Column per band costs several py4j round-trips each,
+    which was a measured share of the LSH queries' plan construction.
+    ``carry`` rides scalar signature columns through the join for a
+    verify-before-distinct; array payloads never ride (see
+    :func:`_band_pairs`)."""
+    parts = ", ".join(
+        f"struct({i} AS band, {b} AS bucket)" for i, b in enumerate(buckets)
     )
-    return sig.select(
-        F.col("id"), F.explode(F.expr(f"array({parts})")).alias("bb")
-    ).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    keep = ["id", *carry]
+    return sig.select(*keep, F.explode(F.expr(f"array({parts})")).alias("bb")).select(
+        *keep, "bb.band", "bb.bucket"
     )
+
+
+def _band_pairs(
+    a: DataFrame,
+    b: DataFrame | None = None,
+    max_bucket_size: int | None = None,
+    verify: tuple | None = None,
+    directed: bool = False,
+) -> DataFrame:
+    """Distinct candidate pairs (a_id, b_id) of ids sharing a
+    (band, bucket), from :func:`_band_rows` relations.
+
+    - ``b`` None: self-join of ``a``, a_id < b_id.
+    - ``b`` given: ``a`` probes the indexed relation ``b``, ids
+      unequal (after a crash replay a batch's own docs may already sit
+      in the index, and a self-pair would read as "new duplicates
+      old"). The pair is ordered (least, greatest), or kept as
+      (a id, b id) when ``directed`` (query → candidate).
+
+    ``max_bucket_size`` drops (band, bucket) groups of the indexed side
+    larger than the cap before the join. Bucket sizes are the skew risk
+    at 100 TB: one boilerplate phrase shared by 10M docs makes a bucket
+    whose self-join is 10M²; a pair that really is a near-dup still
+    meets in its other bands, so recall loss is confined to pairs
+    similar only in the skewed content. The window count is one extra
+    shuffle on the join's own keys and never materializes mega-bucket
+    pairs; AQE skew-join handles the moderate skew below the cap.
+
+    ``verify`` = (name, Column over ``a.*``/``b.*``, bound) keeps rows
+    whose value is ≤ bound as column ``name``, evaluated on the raw
+    join rows BEFORE the distinct: for scalar signatures that is a few
+    integer ops per collision, and only true pairs reach the distinct
+    exchange (measured 3.4M → 90k rows into it on the boilerplate-heavy
+    test corpus for SimHash). Without it the pairs are ids only, and
+    array payloads are attached once, after the distinct."""
+    idx = a if b is None else b
+    if max_bucket_size is not None:
+        wb = Window.partitionBy("band", "bucket")
+        idx = (
+            idx.withColumn("__bsz", F.count(F.lit(1)).over(wb))
+            .filter(F.col("__bsz") <= max_bucket_size)
+            .drop("__bsz")
+        )
+    ai, bi = F.col("a.id"), F.col("b.id")
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
+    if b is None:
+        a, on, pair = idx, on & (ai < bi), (ai, bi)
+    else:
+        on = on & (ai != bi)
+        pair = (ai, bi) if directed else (F.least(ai, bi), F.greatest(ai, bi))
+    cols = [pair[0].alias("a_id"), pair[1].alias("b_id")]
+    if verify is not None:
+        name, value, bound = verify
+        cols.append(value.alias(name))
+    out = a.alias("a").join(idx.alias("b"), on).select(*cols)
+    if verify is not None:
+        out = out.filter(F.col(name) <= bound)
+    return out.distinct()
+
+
+def _attach_payload(
+    cand: DataFrame, payload: DataFrame, b_payload: DataFrame | None = None
+) -> DataFrame:
+    """Candidate pairs (a_id, b_id) with each side's (id, …) payload
+    row attached as ``pa.*`` / ``pb.*`` — two id joins, run once after
+    the candidate distinct. ``b_payload`` defaults to ``payload``."""
+    pb = payload if b_payload is None else b_payload
+    return cand.join(payload.alias("pa"), F.col("a_id") == F.col("pa.id")).join(
+        pb.alias("pb"), F.col("b_id") == F.col("pb.id")
+    )
+
+
+def banded_buckets(sig: DataFrame, num_bands: int = 16) -> DataFrame:
+    """Band a MinHash signature relation into (id, band, bucket) rows —
+    one xxhash64 bucket per band over that band's ``h…`` columns."""
+    hcols = [c for c in sig.columns if c.startswith("h")]
+    return _band_rows(sig, _hash_bands(hcols, num_bands))
 
 
 def lsh_candidate_pairs(
     sig: DataFrame, num_bands: int = 16, max_bucket_size: int | None = None
 ) -> DataFrame:
-    """Band the signature and bucket-join: docs sharing any band bucket
-    become candidate pairs (a_id < b_id, distinct).
-
-    Scale shape: explode to (band, bucket_hash) rows → self-join per
-    bucket. Bucket sizes are the skew risk at 100 TB: one boilerplate
-    phrase shared by 10M docs makes a bucket whose self-join is 10M² —
-    ``max_bucket_size`` drops those degenerate buckets before the join
-    (a doc pair that REALLY is a near-dup still meets in its other,
-    non-boilerplate bands, so recall loss is confined to pairs similar
-    only in the skewed content). AQE skew-join handles the moderate
-    skew below the cap.
-    """
-    return candidate_pairs_from_bands(
-        _cap_buckets(banded_buckets(sig, num_bands), max_bucket_size)
-    )
-
-
-def _cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """Drop degenerate (band, bucket) groups larger than the cap — one
-    extra shuffle on the same keys the candidate join uses; the window
-    count never materializes mega-bucket pairs."""
-    if max_bucket_size is None:
-        return bands
-    wb = Window.partitionBy("band", "bucket")
-    return (
-        bands.withColumn("__bsz", F.count(F.lit(1)).over(wb))
-        .filter(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
-    )
-
-
-def candidate_pairs_from_bands(bands: DataFrame) -> DataFrame:
-    """Distinct (a_id < b_id) pairs sharing any (band, bucket)."""
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
-    )
+    """Band the MinHash signature and bucket-join: docs sharing any
+    band bucket become candidate pairs (a_id < b_id, distinct).
+    ``max_bucket_size`` is :func:`_band_pairs`' degenerate-bucket cap."""
+    return _band_pairs(banded_buckets(sig, num_bands), max_bucket_size=max_bucket_size)
 
 
 def minhash_lsh_dedup(
@@ -360,14 +483,13 @@ def _jaccard_verify(cand: DataFrame, dsh: DataFrame) -> DataFrame:
     """Exact Jaccard for (a_id, b_id) candidates: two id-joins against
     the per-doc shingle arrays + ``array_intersect`` inside the row."""
     return (
-        cand.join(dsh.alias("da"), F.col("a_id") == F.col("da.id"))
-        .join(dsh.alias("db"), F.col("b_id") == F.col("db.id"))
+        _attach_payload(cand, dsh)
         .select(
             "a_id",
             "b_id",
-            F.size(F.array_intersect("da.sh", "db.sh")).alias("n_inter"),
-            F.size("da.sh").alias("na"),
-            F.size("db.sh").alias("nb"),
+            F.size(F.array_intersect("pa.sh", "pb.sh")).alias("n_inter"),
+            F.size("pa.sh").alias("na"),
+            F.size("pb.sh").alias("nb"),
         )
         .select(
             "a_id",
@@ -481,25 +603,8 @@ def neardup_pairs_vs_index(
     within the batch — the per-batch work of incremental dedup when the
     corpus index is already materialized. Index-side work is ONE probe
     of its band relation; nothing corpus-sized is recomputed."""
-    ib = _cap_buckets(index_bands, max_bucket_size)
-    # id-inequality matters: after a crash replay the batch's own docs
-    # may already sit in the index, and a self-pair (x, x) would read
-    # as "new duplicates old" and wipe the doc on re-delivery
-    cross = (
-        batch_bands.alias("n")
-        .join(
-            ib.alias("o"),
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.bucket") == F.col("o.bucket"))
-            & (F.col("n.id") != F.col("o.id")),
-        )
-        .select(
-            F.least(F.col("n.id"), F.col("o.id")).alias("a_id"),
-            F.greatest(F.col("n.id"), F.col("o.id")).alias("b_id"),
-        )
-        .distinct()
-    )
-    within = candidate_pairs_from_bands(_cap_buckets(batch_bands, max_bucket_size))
+    cross = _band_pairs(batch_bands, index_bands, max_bucket_size)
+    within = _band_pairs(batch_bands, max_bucket_size=max_bucket_size)
     # no outer distinct: cross pairs carry exactly one index-side id and
     # within pairs two batch-side ids, so under the disjoint-id contract
     # the sets cannot overlap — deduplicating them again would re-shuffle
@@ -704,70 +809,24 @@ def simhash_pairs(
     yields a complete candidate set for ``max_distance < num_bands`` —
     then verify true Hamming distance. Returns (a_id, b_id, hamming).
 
-    ``num_bands`` defaults to ``max_distance + 1`` — the pigeonhole
-    MINIMUM. Fewer bands is impossible (completeness breaks); more
-    bands is strictly worse (each extra band narrows every bucket,
-    and candidate volume grows ~ num_bands · n² / 2^band_width — at
-    d=6 the old 12×5-bit default generated ~10× the candidates of
-    7×{9,8}-bit). Bit-widths are distributed as evenly as possible
-    over the 60 bits.
+    ``num_bands`` defaults to ``max_distance + 1``, the pigeonhole
+    minimum (:func:`_pigeonhole_spans`; at d=6 the old 12×5-bit
+    default generated ~10× the candidates of 7×{9,8}-bit). Bit-widths
+    are distributed as evenly as possible over the 60 bits.
 
     Calibration on the test corpus: planted near-dups land at distance
     0-9, background pairs at median ~18 (word-level SimHash on short
     docs is noisy — expect some background pairs below 10; MinHash-LSH
     is the higher-precision choice, SimHash the cheaper signature).
     """
-    if num_bands is None:
-        num_bands = max_distance + 1
-    if num_bands > SIMHASH_BITS:
-        raise ValueError("num_bands cannot exceed the signature width")
-    if num_bands <= max_distance:
-        # pigeonhole completeness REQUIRES max_distance < num_bands: a
-        # true pair could differ by one bit in every band, share no
-        # bucket, and be silently dropped — an incomplete result, not a
-        # slower one.
-        raise ValueError(
-            f"num_bands ({num_bands}) must exceed max_distance "
-            f"({max_distance}) for a complete candidate set"
-        )
+    spans = _pigeonhole_spans(SIMHASH_BITS, max_distance, num_bands)
     # persist: the banded self-join consumes the signature relation on
     # both sides — without it the signature fold runs twice.
     sig = simhash_signatures(df, text_col, id_col).persist()
-    base, extra = divmod(SIMHASH_BITS, num_bands)
-    widths = [base + (1 if i < extra else 0) for i in range(num_bands)]
-    offsets = [sum(widths[:i]) for i in range(num_bands)]
-    bands = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned(F.col("simhash"), offsets[i])
-            .bitwiseAND(F.lit((1 << widths[i]) - 1))
-            .alias("bucket"),
-        )
-        for i in range(num_bands)
-    ]
-    exploded = sig.select("id", "simhash", F.explode(F.array(*bands)).alias("bb")).select(
-        "id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    # Verify BEFORE deduplicating: the Hamming check is two integer ops
-    # per raw candidate row, so running it on the multi-band duplicates
-    # and distinct-ing only the survivors shuffles |true pairs| · bands
-    # rows instead of the full candidate multiset (measured 3.4M → 90k
-    # rows into the exchange on the boilerplate-heavy test corpus).
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .distinct()
+    buckets = _bit_bands(["simhash"], spans)
+    ham = hamming64(F.col("a.simhash"), F.col("b.simhash"))
+    return _band_pairs(
+        _band_rows(sig, buckets, ["simhash"]), verify=("hamming", ham, max_distance)
     )
 
 
@@ -843,23 +902,6 @@ def hamming120(a_lo, a_hi, b_lo, b_hi):
     )
 
 
-def _wide_bucket(p: int, w: int):
-    """Bits [p, p+w) of the logical 120-bit value held as limbs
-    (sim_lo = bits 0-59, sim_hi = bits 60-119). The straddling case
-    masks the hi limb BEFORE shifting left, so every intermediate
-    stays < 2^w ≤ 2^18 — no signed-64 overflow under ANSI mode."""
-    lo, hi = F.col("sim_lo"), F.col("sim_hi")
-    mask = (1 << w) - 1
-    if p + w <= 60:
-        return F.shiftrightunsigned(lo, p).bitwiseAND(F.lit(mask))
-    if p >= 60:
-        return F.shiftrightunsigned(hi, p - 60).bitwiseAND(F.lit(mask))
-    hi_part = F.shiftleft(
-        hi.bitwiseAND(F.lit((1 << (p + w - 60)) - 1)), 60 - p
-    )
-    return F.shiftrightunsigned(lo, p).bitwiseOR(hi_part)
-
-
 def simhash_wide_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -879,58 +921,16 @@ def simhash_wide_pairs(
     linear at corpus scales where the 60-bit geometry has gone
     quadratic (BASELINE.md Round 8 measured 3.0B→23.8B raw candidates
     sf10→sf30)."""
-    if num_bands is None:
-        num_bands = max_distance + 1
-    if num_bands > SIMHASH_WIDE_BITS:
-        raise ValueError("num_bands cannot exceed the signature width")
-    if num_bands <= max_distance:
-        raise ValueError(
-            f"num_bands ({num_bands}) must exceed max_distance "
-            f"({max_distance}) for a complete candidate set"
-        )
+    spans = _pigeonhole_spans(SIMHASH_WIDE_BITS, max_distance, num_bands)
+    # persisted for the self-join, as in simhash_pairs
     sig = simhash_wide_signatures(df, text_col, id_col).persist()
-    base, extra = divmod(SIMHASH_WIDE_BITS, num_bands)
-    widths = [base + (1 if i < extra else 0) for i in range(num_bands)]
-    offsets = [sum(widths[:i]) for i in range(num_bands)]
-    bands = [
-        F.struct(
-            F.lit(i).alias("band"),
-            _wide_bucket(offsets[i], widths[i]).alias("bucket"),
-        )
-        for i in range(num_bands)
-    ]
-    exploded = sig.select(
-        "id", "sim_lo", "sim_hi", F.explode(F.array(*bands)).alias("bb")
-    ).select(
-        "id",
-        "sim_lo",
-        "sim_hi",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
+    limbs = ["sim_lo", "sim_hi"]
+    ham = hamming120(
+        F.col("a.sim_lo"), F.col("a.sim_hi"), F.col("b.sim_lo"), F.col("b.sim_hi")
     )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    # verify-before-distinct, as in simhash_pairs: Hamming is four
-    # integer ops per raw candidate inside the join loop; only true
-    # pairs reach the distinct exchange.
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            hamming120(
-                F.col("a.sim_lo"),
-                F.col("a.sim_hi"),
-                F.col("b.sim_lo"),
-                F.col("b.sim_hi"),
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .distinct()
+    return _band_pairs(
+        _band_rows(sig, _bit_bands(limbs, spans, 60), limbs),
+        verify=("hamming", ham, max_distance),
     )
 
 

@@ -146,6 +146,10 @@ def pagerank(
             return spark.createDataFrame(
                 [(n, int(r[n])) for n in nodes_d], out_schema
             )
+    # distributed path: ``we`` (persisted above when ours) and
+    # ``nodes`` feed every iteration of the RETURNED lazy plan, so they
+    # stay cached past return — caller-owned, per the module's
+    # cache-lifetime note
     outw = we.groupBy(src).agg(F.sum("w").cast("bigint").alias("tw"))
     # node set from the AGGREGATED relation — it carries the identical
     # distinct src/dst values, so deriving nodes from the raw edge

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .dedup import _band_pairs, _band_rows, _bit_bands, _pigeonhole_spans, hamming64
+
 try:  # pragma: no cover - codec libs absent in this container
     from PIL import Image  # type: ignore
 
@@ -672,55 +674,18 @@ def ahash_near_dup_pairs(hashed: DataFrame, max_dist: int = 3) -> DataFrame:
     pair within distance 3 shares at least one fully-equal band
     (pigeonhole), so candidates come from band-keyed equi-joins —
     never an all-pairs signature product — and the exact popcount
-    verify (bit_count(xor)) runs only on candidates. The same
-    LSH-shaped plan as the text SimHash operator."""
-    n_bands = 4
-    assert max_dist < n_bands, "pigeonhole needs max_dist < n_bands"
-    bands = hashed.select(
-        F.col("item_id"),
-        F.col("ahash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.expr(
-                            f"CAST(shiftright(ahash, {i * 16}) & 65535 AS INT)"
-                        ).alias("band_val"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("item_id", "ahash", "b.band_idx", "b.band_val")
-    # the popcount verify runs BEFORE the pair distinct (two integer
-    # ops per raw band collision vs shuffling every spurious collision
-    # through a distinct — the simhash_pairs ordering), and the
-    # signature relation persists because the banded self-join
-    # consumes it on both sides: without it an expensive upstream
-    # (image_ahash's Python PNG decode) would run twice
-    bands = bands.persist()
-    return (
-        bands.select(
-            F.col("item_id").alias("a_id"),
-            F.col("ahash").alias("a_hash"),
-            "band_idx",
-            "band_val",
-        )
-        .join(
-            bands.select(
-                F.col("item_id").alias("b_id"),
-                F.col("ahash").alias("b_hash"),
-                "band_idx",
-                "band_val",
-            ),
-            ["band_idx", "band_val"],
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("dist", F.expr("bit_count(a_hash ^ b_hash)").cast("int"))
-        .filter(F.col("dist") <= max_dist)
-        .select("a_id", "b_id", "dist")
-        .distinct()
+    verify (bit_count(xor)) runs only on candidates, before the pair
+    distinct — the banded-candidate primitive of ``dedup``, as for the
+    text SimHash."""
+    spans = _pigeonhole_spans(64, max_dist, 4)
+    # persist: the banded self-join consumes the signature relation on
+    # both sides — without it an expensive upstream (image_ahash's
+    # Python PNG decode) would run twice
+    sig = hashed.select(F.col("item_id").alias("id"), "ahash").persist()
+    dist = hamming64(F.col("a.ahash"), F.col("b.ahash"))
+    return _band_pairs(
+        _band_rows(sig, _bit_bands(["ahash"], spans), ["ahash"]),
+        verify=("dist", dist, max_dist),
     )
 
 

@@ -4,16 +4,19 @@
   product (posexplode + join on position + sum). The correctness
   baseline; O(|Q|·|C|·dim) — fine for small query sets, the verify
   stage of ANN, and re-ranking.
-- :func:`lsh_topk` — the scale path: random-hyperplane LSH (sign-bit
-  signature, banded buckets) prunes candidates, then the exact scorer
-  runs only within buckets. Planes are generated from a fixed seed on
-  the driver (a few KB) and broadcast as a literal column — no UDF,
-  no shuffle for signatures.
+- :func:`lsh_topk` / :func:`lsh_near_dup_pairs` — the scale path:
+  random-hyperplane LSH (sign-bit signature) sliced into bands and run
+  through the package's one banded-candidate primitive
+  (``dedup._band_rows`` / ``dedup._band_pairs``): the band join
+  carries ids only, and the embeddings are attached once, after the
+  candidate distinct, for the exact cosine verify. Planes are
+  generated from a fixed seed on the driver (a few KB) and inlined as
+  a literal — no UDF, no shuffle for signatures.
+- :func:`ivf_topk` — inverted-file cells from a k-means-lite fit:
+  assign → cell join → exact verify.
 
 At 100 TB the candidate side is partitioned by bucket and only
 bucket-local pairs are scored; recall is tuned by (num_bits, num_bands).
-An IVF-style variant would replace the hash buckets with k-means cells
-— same plan shape (assign → bucket-join → exact verify).
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import _attach_payload, _band_pairs, _band_rows, _bit_bands
 
 
 def _norm_sq(col):
@@ -38,12 +43,13 @@ def _dot(a, b):
     )
 
 
+def _cosine(a, b):
+    return _dot(a, b) / (F.sqrt(_norm_sq(a)) * F.sqrt(_norm_sq(b)))
+
+
 def with_cosine(pairs: DataFrame, a_col: str = "a_emb", b_col: str = "b_emb") -> DataFrame:
     """Add ``cosine`` between two embedding columns (fold-based, JVM-side)."""
-    a, b = F.col(a_col), F.col(b_col)
-    return pairs.withColumn(
-        "cosine", _dot(a, b) / (F.sqrt(_norm_sq(a)) * F.sqrt(_norm_sq(b)))
-    )
+    return pairs.withColumn("cosine", _cosine(F.col(a_col), F.col(b_col)))
 
 
 def brute_force_topk(
@@ -64,10 +70,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "cand_id",
-            (
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.sqrt(_norm_sq(F.col("q_emb"))) * F.sqrt(_norm_sq(F.col("c_emb"))))
-            ).alias("cosine"),
+            _cosine(F.col("q_emb"), F.col("c_emb")).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
@@ -400,7 +403,10 @@ def ivf_topk(
         # argmin-assignment expression — the heaviest per-row work
         # here — is evaluated ONCE instead of twice (sizes pass +
         # probe join). Identical numbers reach the probe take-while,
-        # so the probe lists and results are unchanged.
+        # so the probe lists and results are unchanged. Both branches
+        # of the RETURNED plan read it, so it cannot be released here:
+        # its lifetime is caller-owned (package cache-ownership
+        # convention, see the package docstring).
         cand_cells = cand_cells.persist()
     if min_coverage is None:
         # per-query probe list: n_probe nearest centroids
@@ -440,10 +446,7 @@ def ivf_topk(
         .select(
             "query_id",
             "cand_id",
-            (
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.sqrt(_norm_sq(F.col("q_emb"))) * F.sqrt(_norm_sq(F.col("c_emb"))))
-            ).alias("cosine"),
+            _cosine(F.col("q_emb"), F.col("c_emb")).alias("cosine"),
         )
         .distinct()
     )
@@ -483,51 +486,36 @@ def lsh_near_dup_pairs(
     vectors, template images) would otherwise pay a quadratic join in
     that one bucket.
     """
-    width = num_bits // num_bands
-    mask = (1 << width) - 1
-    sig = lsh_signature(emb, vec_col, num_bits, seed, dim)
-    bands = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned(F.col("sig"), i * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("bucket"),
-        )
-        for i in range(num_bands)
-    ]
-    exploded = sig.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("emb"),
-        F.explode(F.array(*bands)).alias("bb"),
-    ).select("id", "emb", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    from .dedup import _cap_buckets
+    payload = _payload(emb, id_col, vec_col)
+    bands = _lsh_band_rows(payload, num_bits, num_bands, seed, dim)
+    cand = _band_pairs(bands, max_bucket_size=max_bucket_size)
+    return _cosine_pairs(cand, payload).filter(F.col("cosine") >= threshold)
 
-    exploded = _cap_buckets(exploded, max_bucket_size)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("a.emb").alias("a_emb"),
-            F.col("b.id").alias("b_id"),
-            F.col("b.emb").alias("b_emb"),
-        )
-        .distinct()
+
+def _payload(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb"))
+
+
+def _lsh_band_rows(
+    payload: DataFrame, num_bits: int, num_bands: int, seed: int, dim: int
+) -> DataFrame:
+    """(id, band, bucket) hyperplane-LSH bands of an (id, emb) payload:
+    ``num_bands`` slices of ``num_bits // num_bands`` signature bits."""
+    width = num_bits // num_bands
+    spans = [(i * width, width) for i in range(num_bands)]
+    sig = lsh_signature(payload, "emb", num_bits, seed, dim)
+    return _band_rows(sig, _bit_bands(["sig"], spans))
+
+
+def _cosine_pairs(
+    cand: DataFrame, payload: DataFrame, b_payload: DataFrame | None = None
+) -> DataFrame:
+    """(a_id, b_id, cosine) for distinct id-only candidate pairs: the
+    embeddings are attached once, after the distinct, never dragged
+    through the band join."""
+    return _attach_payload(cand, payload, b_payload).select(
+        "a_id", "b_id", _cosine(F.col("pa.emb"), F.col("pb.emb")).alias("cosine")
     )
-    scored = cand.select(
-        "a_id",
-        "b_id",
-        (
-            _dot(F.col("a_emb"), F.col("b_emb"))
-            / (F.sqrt(_norm_sq(F.col("a_emb"))) * F.sqrt(_norm_sq(F.col("b_emb"))))
-        ).alias("cosine"),
-    )
-    return scored.filter(F.col("cosine") >= threshold)
 
 
 def lsh_topk(
@@ -544,49 +532,16 @@ def lsh_topk(
     """ANN top-k: hyperplane-LSH banded buckets → exact cosine within
     candidates. Returns (query_id, cand_id, cosine, rnk); recall < 1 by
     design, tuned by (num_bits, num_bands)."""
-    width = num_bits // num_bands
-    mask = (1 << width) - 1
-
-    def banded(df: DataFrame, role: str) -> DataFrame:
-        sig = lsh_signature(df, vec_col, num_bits, seed, dim)
-        bands = [
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("sig"), i * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("bucket"),
-            )
-            for i in range(num_bands)
-        ]
-        return sig.select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col(vec_col).alias(f"{role}_emb"),
-            F.explode(F.array(*bands)).alias("bb"),
-        ).select(
-            f"{role}_id", f"{role}_emb", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    qb = banded(queries, "query")
-    cb = banded(emb, "cand")
-    cand = (
-        F.broadcast(qb)
-        .join(cb, ["band", "bucket"])
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            F.col("query_emb").alias("q_emb"),
-            "cand_id",
-            F.col("cand_emb").alias("c_emb"),
-        )
-        .distinct()
+    qp, cp = _payload(queries, id_col, vec_col), _payload(emb, id_col, vec_col)
+    # the query side is small by contract: broadcast its bands and
+    # payload, stream the corpus side
+    cand = _band_pairs(
+        F.broadcast(_lsh_band_rows(qp, num_bits, num_bands, seed, dim)),
+        _lsh_band_rows(cp, num_bits, num_bands, seed, dim),
+        directed=True,
     )
-    scored = cand.select(
-        "query_id",
-        "cand_id",
-        (
-            _dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.sqrt(_norm_sq(F.col("q_emb"))) * F.sqrt(_norm_sq(F.col("c_emb"))))
-        ).alias("cosine"),
+    scored = _cosine_pairs(cand, F.broadcast(qp), cp).select(
+        F.col("a_id").alias("query_id"), F.col("b_id").alias("cand_id"), "cosine"
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
     return (

@@ -247,6 +247,8 @@ def _q158_distributed(b: DataFrame, stats_rel: DataFrame) -> DataFrame:
     (collect_sort matches the driver path's sorted literal), supports
     attach by broadcast equi-join, and every division is the same
     truncating BIGINT expression — bit-identical output."""
+    # the frequent set feeds three branches of the returned plan (the
+    # broadcast item array and both support lookups) — caller-owned
     freq = stats_rel.filter(F.expr("supp * 200 >= n_orders")).persist()
     farr_row = freq.agg(
         F.coalesce(

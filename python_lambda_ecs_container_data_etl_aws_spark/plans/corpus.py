@@ -652,7 +652,7 @@ def q85(spark: SparkSession, sf_dir: str) -> DataFrame:
 # through ONE hot shingle on the 100k boilerplate-heavy smoke. So
 # candidate GENERATION uses only informative shingles (document
 # frequency <= _Q86_DF_CAP across both sides — the "stop shingle"
-# rule, same idea as the LSH bucket cap in dedup._cap_buckets), while
+# rule, same idea as the LSH bucket cap in dedup._band_pairs), while
 # the Jaccard VERIFY still counts every shared shingle, restricted to
 # candidate pairs. A pair sharing ONLY ubiquitous shingles is not
 # reported — that is the operator's documented semantic, identical in

@@ -400,8 +400,8 @@ def dedup_ingest_stream(
     import os
 
     from ..operators.dedup import (
+        _band_pairs,
         _jaccard_verify,
-        candidate_pairs_from_bands,
         lsh_index_of,
         neardup_pairs_vs_index,
     )
@@ -430,7 +430,7 @@ def dedup_ingest_stream(
             ib = spark.read.parquet(os.path.join(index_dir, "bands")).drop("batch")
             pairs = neardup_pairs_vs_index(ish, ib, bsh, bb, threshold)
         else:
-            pairs = _jaccard_verify(candidate_pairs_from_bands(bb), bsh).filter(
+            pairs = _jaccard_verify(_band_pairs(bb), bsh).filter(
                 F.col("jaccard") >= threshold
             )
         new_ids = batch.select(F.col(id_col).alias("nid"))

@@ -139,51 +139,26 @@ def test_simhash_wide_vs_narrow_candidate_density(spark, docs):
             or 0
         )
 
-    sig = dedup.simhash_signatures(docs)
-    base, extra = divmod(dedup.SIMHASH_BITS, 7)
-    widths = [base + (1 if i < extra else 0) for i in range(7)]
-    offsets = [sum(widths[:i]) for i in range(7)]
-    narrow = sig.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), offsets[i])
-                        .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                        .alias("bucket"),
-                    )
-                    for i in range(7)
-                ]
-            )
-        ).alias("bb")
-    ).select("bb.band", "bb.bucket")
-
-    wsig = dedup.simhash_wide_signatures(docs)
-    wb, wextra = divmod(dedup.SIMHASH_WIDE_BITS, 7)
-    wwidths = [wb + (1 if i < wextra else 0) for i in range(7)]
-    woffsets = [sum(wwidths[:i]) for i in range(7)]
-    wide = wsig.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        dedup._wide_bucket(woffsets[i], wwidths[i]).alias(
-                            "bucket"
-                        ),
-                    )
-                    for i in range(7)
-                ]
-            )
-        ).alias("bb")
-    ).select("bb.band", "bb.bucket")
+    # the d=6 pigeonhole geometry of both widths, through the same
+    # band emitter the operators use
+    narrow = dedup._band_rows(
+        dedup.simhash_signatures(docs),
+        dedup._bit_bands(["simhash"], dedup._pigeonhole_spans(dedup.SIMHASH_BITS, 6)),
+    )
+    wide = dedup._band_rows(
+        dedup.simhash_wide_signatures(docs),
+        dedup._bit_bands(
+            ["sim_lo", "sim_hi"],
+            dedup._pigeonhole_spans(dedup.SIMHASH_WIDE_BITS, 6),
+            60,
+        ),
+    )
 
     n_narrow, n_wide = raw_candidates(narrow), raw_candidates(wide)
     # at sf0.001 the PLANTED near-dup pairs floor both schemes (a true
     # pair agrees on ≥1 band in either geometry), so the observable
-    # gap here is a few ×, not the asymptotic 2^8 — the full cut is
-    # measured at sf10/sf30 by tools/q193_density_probe.py
+    # gap here is a few ×, not the asymptotic 2^8 — the full cut was
+    # measured at sf10/sf30 (BASELINE.md Round 9, Q193_DENSITY_r09.json)
     assert n_wide * 4 < n_narrow, (n_wide, n_narrow)
     spark.catalog.clearCache()
 
@@ -219,23 +194,53 @@ def test_simhash_wide_band_extraction_covers_all_bits(spark):
     """The limb-straddling band (offset 52, width 17 at the 7-band
     default) must reassemble bits exactly: concatenating every band's
     bucket in order reconstructs the full 120-bit signature for
-    random signatures."""
+    random signatures. The aHash 4×16 layout over one signed 64-bit
+    limb must do the same, bit 63 (the sign bit) included, which sits
+    in the top slice."""
+
+    def rebuilt(sig, limbs, spans, limb_bits=64):
+        out = {}
+        bands = dedup._band_rows(sig, dedup._bit_bands(limbs, spans, limb_bits))
+        for r in bands.collect():
+            out[r.id] = out.get(r.id, 0) | (r.bucket << spans[r.band][0])
+        return out
+
     rows = [(i, f"tok{i} tok{i * 7} tok{i * 13} x y z") for i in range(50)]
     df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     sig = dedup.simhash_wide_signatures(df)
-    base, extra = divmod(dedup.SIMHASH_WIDE_BITS, 7)
-    widths = [base + (1 if i < extra else 0) for i in range(7)]
-    offsets = [sum(widths[:i]) for i in range(7)]
-    cols = [
-        dedup._wide_bucket(offsets[i], widths[i]).alias(f"b{i}")
-        for i in range(7)
-    ]
-    for r in sig.select("sim_lo", "sim_hi", *cols).collect():
-        full = r.sim_lo | (r.sim_hi << 60)
-        rebuilt = 0
-        for i in range(7):
-            rebuilt |= r[f"b{i}"] << offsets[i]
-        assert rebuilt == full
+    spans = dedup._pigeonhole_spans(dedup.SIMHASH_WIDE_BITS, 6)
+    assert any(p < 60 < p + w for p, w in spans)  # a band straddles the limbs
+    got = rebuilt(sig, ["sim_lo", "sim_hi"], spans, 60)
+    want = {r.id: r.sim_lo | (r.sim_hi << 60) for r in sig.collect()}
+    assert got == want
+
+    values = [-1, -(1 << 63), (1 << 63) - 1, 0, 1 << 48, -0x123456789ABCDEF]
+    ahash = spark.createDataFrame(list(enumerate(values)), "id BIGINT, ahash BIGINT")
+    spans = dedup._pigeonhole_spans(64, 3, 4)
+    assert spans[-1] == (48, 16)
+    got = rebuilt(ahash, ["ahash"], spans)
+    assert got == {i: v & ((1 << 64) - 1) for i, v in enumerate(values)}
+
+
+def test_banded_buckets_quotes_signature_columns(spark):
+    """Signature column names are interpolated into the band SQL, so
+    one that needs quoting (a space, a dash) must still band — with
+    the same xxhash64 buckets the Column API computes."""
+    sig = spark.createDataFrame(
+        [(1, 10, 20, 30, 40), (2, 10, 20, 31, 41)],
+        "id BIGINT, `h 0` BIGINT, `h-1` BIGINT, `h 2` BIGINT, `h-3` BIGINT",
+    )
+    got = {(r.id, r.band): r.bucket for r in dedup.banded_buckets(sig, 2).collect()}
+    want = {}
+    for r in sig.select(
+        "id",
+        F.xxhash64(F.col("`h 0`"), F.col("`h-1`")).alias("b0"),
+        F.xxhash64(F.col("`h 2`"), F.col("`h-3`")).alias("b1"),
+    ).collect():
+        want[(r.id, 0)], want[(r.id, 1)] = r.b0, r.b1
+    assert got == want
+    pairs = dedup.lsh_candidate_pairs(sig, 2).collect()
+    assert [(r.a_id, r.b_id) for r in pairs] == [(1, 2)]
 
 
 def test_lsh_ann_recall_vs_brute_force(spark, emb):

@@ -1225,7 +1225,9 @@ def test_synth_sf_replication_invariants(tmp_path):
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
     from synth_sf import synth
 
     dst = str(tmp_path / "sf2x")
