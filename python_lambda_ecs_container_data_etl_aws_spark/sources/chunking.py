@@ -17,6 +17,12 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .jvm import _local_rows
+
+# (partition id → rows before it) — built JVM-side: a Python-list
+# relation would start Python-worker tasks for the broadcast build
+_OFFSETS = "__pid INT, __off BIGINT"
+
 
 def add_autoid(df: DataFrame, order_cols: list[str], partitions: int | None = None) -> DataFrame:
     """Append dense 1-based ``autoid`` ordered by ``order_cols``.
@@ -64,9 +70,7 @@ def add_autoid(df: DataFrame, order_cols: list[str], partitions: int | None = No
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    off_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__pid INT, __off BIGINT"
-    )
+    off_df = _local_rows(df.sparkSession, offsets or [(0, 0)], _OFFSETS)
     rn = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1
     return (
         ranged.withColumn("__rn", rn)
@@ -111,7 +115,7 @@ def add_prefix_sum(
     for pid in sorted(sums):
         offsets.append((pid, acc))
         acc += int(sums[pid] or 0)
-    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "__pid INT, __off BIGINT")
+    off_df = _local_rows(df.sparkSession, offsets or [(0, 0)], _OFFSETS)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)

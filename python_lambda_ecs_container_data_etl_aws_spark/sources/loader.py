@@ -112,8 +112,12 @@ def read_csv_canonical(
             for c in spec.canonical_columns
         ]
     )
-    src_rows = raw.count()
-    bad_rows = bad.count()
+    # one aggregate over the cached scan: both counts, and the action
+    # that materializes the cache the later good/quarantine reads use
+    counts = raw.agg(
+        F.count(F.lit(1)).alias("src"), F.count(CORRUPT_COL).alias("bad")
+    ).first()
+    src_rows, bad_rows = int(counts["src"]), int(counts["bad"])
     return IngestResult(
         good=projected,
         quarantine=bad,

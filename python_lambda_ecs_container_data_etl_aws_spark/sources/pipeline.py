@@ -29,6 +29,12 @@ rewriting a 100 TB table. On Delta/Iceberg steps 2-3 collapse into
 The A2 count gate (`2.2:300-308`) validates the rows THIS file
 delivered (src − bad vs rows staged), never the cumulative table —
 comparing a 2-row delta against a billion-row table is meaningless.
+
+Counts ride on actions that already run: the read's one aggregate
+gives src/bad rows, one aggregate over the delta gives loaded rows and
+the touched buckets, and the write gate's expected count is observed
+on the staging write itself (jvm._observed_write) — no persist and no
+recount of the merge.
 """
 
 from __future__ import annotations
@@ -45,6 +51,7 @@ from pyspark.sql import functions as F
 from . import archive as archive_mod
 from . import registry
 from .audit import log_ingest
+from .jvm import _observed_write
 from .loader import IngestResult, read_csv_canonical, validate_counts
 from .merge import upsert
 from .report import ReportSpec, aggregate_state, last_applied_marker, refresh_report
@@ -273,14 +280,14 @@ def ingest_file(
     _heal_bucket_asides(table_dir)
     # Per-file A2 gate, two halves:
     #  - parse gate (the reference's maxerrors semantics): src rows
-    #    minus bad rows vs what the canonical read produced;
-    #  - write gate: the files THIS load physically wrote, read back
-    #    (parquet footers — no data scan), must hold the rows the plan
-    #    claimed. Comparing the plan against itself would be a
-    #    tautology; the read-back catches lost/partial writes, and
-    #    every count is bounded by the delta/touched buckets, never the
-    #    table.
-    loaded = res.good.count()
+    #    minus bad rows vs what the canonical read produced (``loaded``,
+    #    counted below in the same aggregate as the touched buckets);
+    #  - write gate: the rows the staging write consumed (observed on
+    #    that write — no persist, no recount) vs the files THIS load
+    #    physically wrote, read back (parquet footers — no data scan).
+    #    Comparing the plan against itself would be a tautology; the
+    #    read-back catches lost/partial writes, and every count is
+    #    bounded by the delta/touched buckets, never the table.
     extras: dict = {}
     write_ok = True
 
@@ -386,6 +393,12 @@ def ingest_file(
                     rejected=True,
                 )
         delta = res.good.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+        # one action over the (cached) delta: its rows and its buckets
+        stats = delta.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sort_array(F.collect_set(BUCKET_COL)).alias("buckets"),
+        ).first()
+        loaded, touched = int(stats["rows"]), list(stats["buckets"])
         if loaded == 0:
             # Empty accepted delta (header-only file, or every bad row
             # quarantined within maxerrors): nothing to merge, and the
@@ -399,31 +412,28 @@ def ingest_file(
         elif table_existed and _is_bucketed(table_dir):
             # Bucket-scoped merge: only partitions the delta hashes into
             # are read, merged, and swapped. Everything else: untouched.
-            touched = sorted(
-                r[BUCKET_COL]
-                for r in delta.select(BUCKET_COL).distinct().collect()
-            )
             perm = spark.read.parquet(table_dir).filter(
                 F.col(BUCKET_COL).isin(touched)
             )
             _refresh_incremental(perm)
-            merged = upsert(perm, delta, keys).persist()
             staging = table_dir + "__staging"
             # cluster by bucket before the partitioned write: the merge
             # join shuffles on the MERGE KEYS, so without this every
             # write task holds rows of many buckets and each bucket dir
             # gets one file per task — small-file accretion that at
             # scale turns scans into file-open storms. One bucket → one
-            # task → one file.
-            (
-                merged.repartition(max(len(touched), 1), F.col(BUCKET_COL))
+            # task → one file. ``expected`` is the merge's row count,
+            # observed on this write (the join runs once).
+            expected = _observed_write(
+                upsert(perm, delta, keys),
+                lambda merged: merged.repartition(
+                    max(len(touched), 1), F.col(BUCKET_COL)
+                )
                 .write.mode("overwrite")
                 .partitionBy(BUCKET_COL)
-                .parquet(staging)
+                .parquet(staging),
             )
-            expected = merged.count()  # cached — no join re-run
             persisted = _count_parquet(spark, staging)
-            merged.unpersist()
             write_ok = persisted == expected
             extras["persisted_rows"] = persisted
             if write_ok:
@@ -447,22 +457,16 @@ def ingest_file(
             else:
                 _refresh_incremental(None)
             staging = table_dir + "__staging"
-            migrated = table_existed
-            if migrated:
-                delta = delta.persist()
-            (
-                delta.repartition(n_buckets, F.col(BUCKET_COL))
+            # fresh table: the written rows are the delta's; migration:
+            # the merged rows — either way observed on this write
+            expected = _observed_write(
+                delta,
+                lambda rows: rows.repartition(n_buckets, F.col(BUCKET_COL))
                 .write.mode("overwrite")
                 .partitionBy(BUCKET_COL)
-                .parquet(staging)
+                .parquet(staging),
             )
-            # fresh table: delta rows == loaded by construction (the
-            # bucket column adds no rows) — only the migration merge
-            # needs its own expected count
-            expected = delta.count() if migrated else loaded
             persisted = _count_parquet(spark, staging)
-            if migrated:
-                delta.unpersist()
             write_ok = persisted == expected
             extras["persisted_rows"] = persisted
             if write_ok:
@@ -472,6 +476,7 @@ def ingest_file(
                 shutil.rmtree(staging, ignore_errors=True)
                 extras["buckets_touched"] = 0
     else:
+        loaded = res.good.count()
         _refresh_incremental(None)
         before_files = (
             {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
@@ -622,15 +627,17 @@ def compact_table(
         if n_files <= max_files_per_bucket:
             return 0
         staging = table_dir + "__compact"
-        src = spark.read.parquet(table_dir)
-        expected = src.count()
-        src.repartition(max_files_per_bucket).write.mode("overwrite").parquet(
-            staging
+        expected = _observed_write(
+            spark.read.parquet(table_dir),
+            lambda src: src.repartition(max_files_per_bucket)
+            .write.mode("overwrite")
+            .parquet(staging),
         )
         # Same "never install a failed write" gate as ingest_file: the
         # read-back (parquet footers only) must hold every pre-compaction
-        # row before the live dir is replaced — a silently short write
-        # must never displace good data.
+        # row (observed on the compaction write) before the live dir is
+        # replaced — a silently short write must never displace good
+        # data.
         persisted = (
             _count_parquet(spark, staging) if expected else 0
         )
@@ -662,17 +669,18 @@ def compact_table(
     oversized = spark.read.parquet(table_dir).filter(
         F.col(BUCKET_COL).isin(todo)
     )
-    expected = oversized.count()
     staging = table_dir + "__compact"
-    (
-        oversized.repartition(len(todo), F.col(BUCKET_COL))
+    expected = _observed_write(
+        oversized,
+        lambda rows: rows.repartition(len(todo), F.col(BUCKET_COL))
         .write.mode("overwrite")
         .partitionBy(BUCKET_COL)
-        .parquet(staging)
+        .parquet(staging),
     )
     # read-back gate before the per-bucket swap, mirroring ingest_file:
     # count the staged rows for the touched buckets (footer-only scan)
-    # against the pre-compaction count and abort on mismatch
+    # against the pre-compaction count (observed on the compaction
+    # write) and abort on mismatch
     persisted = _count_parquet(spark, staging) if expected else 0
     if persisted != expected:
         shutil.rmtree(staging, ignore_errors=True)
